@@ -1653,8 +1653,8 @@ object SparkEntry {
         new SelectPlugin(Map("columns" ->
           Seq("l_orderkey", "l_linenumber", "l_extendedprice")), cfgDir, "default"),
         new SortPlugin(Map("by" -> Seq("l_orderkey", "l_linenumber")), cfgDir, "default"))
-      Pipeline.executeTransformChain(scan.execute(), transforms)
-        .fold(e => throw e, identity)
+      Pipeline.routeTransforms(Map("default" -> scan.execute()), transforms,
+        Pipeline.Run)("default").fold(e => throw e, identity)
     }),
 
     // ================= extension tier =============================

@@ -13,114 +13,66 @@ import org.slf4j.LoggerFactory
   * strategy) as a whole at sink time — the exact architecture the
   * reference gets from Polars lazy frames (docs/plugin_development.md:
   * 536-555). Nothing here runs a Spark job except OutputPlugin.execute.
+  *
+  * `run` and `check` share one label-routed transform fold and one
+  * output fan-out, generic over the stream value: a `DataFrame` for
+  * run ([[Run]]), a `StructType` for check ([[Check]]). Check
+  * therefore routes every label exactly as run does.
   */
 object Pipeline {
   private val log = LoggerFactory.getLogger(getClass)
 
   /** Labeled multi-stream map (reference pipeline.py:13-14). */
-  type LabeledDataMap = Map[String, Either[Throwable, DataFrame]]
-  type LabeledSchemaMap = Map[String, Either[Throwable, StructType]]
+  type Streams[A] = Map[String, Either[Throwable, A]]
+  type LabeledDataMap = Streams[DataFrame]
+  type LabeledSchemaMap = Streams[StructType]
+
+  /** What one pass does at each plugin: `transform` steps a stream
+    * value (a multi-stream plugin also sees the other streams),
+    * `sink` consumes one. */
+  final case class Pass[A, B](
+      verb: String,
+      transform: (TransformPlugin, A, Streams[A]) => Either[Throwable, A],
+      sink: (OutputPlugin, A) => Either[Throwable, B])
+
+  /** `graft run`: plans flow through `execute`; sinks run the jobs. */
+  val Run: Pass[DataFrame, Unit] = Pass("Executing",
+    {
+      case (m: MultiStreamTransformPlugin, df, streams) => m.executeWith(df, streams)
+      case (p, df, _) => p.execute(df)
+    },
+    (p, df) => p.execute(df))
+
+  /** `graft check`: schemas flow through `dryRun`; each sink validates
+    * its label's schema and returns what it would write. */
+  val Check: Pass[StructType, StructType] = Pass("Dry-running",
+    {
+      case (m: MultiStreamTransformPlugin, s, schemas) => m.dryRunWith(s, schemas)
+      case (p, s, _) => p.dryRun(s)
+    },
+    (p, s) => p.dryRun(s))
 
   /** A9 — uniform schema extraction (pipeline.py:17-30). `df.schema`
     * is always available from the analyzed plan; no action. */
   def extractSchema(df: DataFrame): Either[Throwable, StructType] =
     Errors.safe(df.schema)
 
-  /** A10 — sequential monadic fold over transforms; stops at first
-    * Left; logs progress `[i/n] name` (pipeline.py:33-58). */
-  def executeTransformChain(
-      initial: Either[Throwable, DataFrame],
-      transforms: Seq[TransformPlugin]): Either[Throwable, DataFrame] =
-    transforms.zipWithIndex.foldLeft(initial) { case (acc, (p, i)) =>
-      acc.flatMap { df =>
-        log.info(s"[${i + 1}/${transforms.size}] Executing transform: ${p.name}")
-        p.execute(df)
-      }
-    }
-
-  /** A11 — same fold over dry_run(schema) (pipeline.py:61-94). */
-  def executeDryRunChain(
-      initial: Either[Throwable, StructType],
-      transforms: Seq[TransformPlugin],
-      schemaMap: LabeledSchemaMap = Map.empty): Either[Throwable, StructType] =
-    transforms.zipWithIndex.foldLeft(initial) { case (acc, (p, i)) =>
-      acc.flatMap { schema =>
-        log.info(s"[${i + 1}/${transforms.size}] Dry-running transform: ${p.name}")
-        val out = p match {
-          case m: MultiStreamTransformPlugin => m.dryRunWith(schema, schemaMap)
-          case _ => p.dryRun(schema)
-        }
-        out.foreach(s =>
-          log.debug(s"${p.name}: ${schema.size} columns in, ${s.size} columns out"))
-        out
-      }
-    }
-
-  /** A12 — output fan-out: every sink receives the SAME transformed
-    * frame; stop on first failure (pipeline.py:120-140). Each sink is
-    * its own Spark action; with `persistMultiOutput` (the DEFAULT
-    * since round 10) a >1-sink fan-out caches the frame so the
-    * upstream plan runs ONCE — at 100 TB, re-executing a dedup chain
-    * per sink costs hours where the cache costs one spillable copy of
-    * its OUTPUT. Pass `persistMultiOutput=false` for the reference's
-    * recompute-per-sink behavior (Polars re-optimizes per `sink_*`
-    * call), e.g. when the output is larger than the compute that
-    * produced it. Results are identical either way.
+  /** A10/A14 — labeled transform routing (pipeline.py:33-58,
+    * 143-162): a left fold in config order; each transform steps the
+    * stream matching its label and stops that stream at its first
+    * failure. A missing label STORES a Left under that label (the
+    * pipeline continues — note the asymmetry with [[fanOut]], which
+    * short-circuits).
     */
-  def executeOutput(data: Either[Throwable, DataFrame],
-                    outputs: Seq[OutputPlugin],
-                    persistMultiOutput: Boolean = true): Either[Throwable, Unit] = {
-    // never persist a STREAMING frame: Dataset.persist on one throws
-    // (streaming queries execute via writeStream, each sink is its
-    // own query) — multi-sink streaming labels keep per-sink
-    // execution regardless of the flag
-    val frame =
-      if (persistMultiOutput && outputs.size > 1)
-        data.map(df => if (df.isStreaming) df else df.persist())
-      else data
-    val result = outputs.zipWithIndex.foldLeft(frame.map(_ => ())) {
-      case (acc, (p, i)) =>
-        acc.flatMap { _ =>
-          log.info(s"[${i + 1}/${outputs.size}] Executing output: ${p.name}")
-          frame.flatMap(p.execute)
-        }
-    }
-    if (persistMultiOutput && outputs.size > 1)
-      frame.foreach(df => Errors.safe(df.unpersist()))
-    result
-  }
-
-  /** A13 — dry-run fan-out: every output validates the ORIGINAL
-    * schema (`result = schema.bind(plugin.dry_run)` each iteration —
-    * pipeline.py:97-117), so one sink's returned schema never leaks
-    * into the next sink's validation; the LAST sink's result is
-    * returned, and the fold stops at the first failure. */
-  def executeOutputDryRun(schema: Either[Throwable, StructType],
-                          outputs: Seq[OutputPlugin]): Either[Throwable, StructType] =
-    outputs.zipWithIndex.foldLeft(schema) { case (acc, (p, i)) =>
-      acc.flatMap { _ =>
-        log.info(s"[${i + 1}/${outputs.size}] Dry-running output: ${p.name}")
-        schema.flatMap(p.dryRun)
-      }
-    }
-
-  /** A14 — labeled transform routing (pipeline.py:143-162): each
-    * transform applies to the stream matching its label; a missing
-    * label STORES a Left under that label (the pipeline continues —
-    * note the asymmetry with output routing, which short-circuits).
-    */
-  def executeLabeledTransformChain(
-      dataMap: LabeledDataMap,
-      transforms: Seq[TransformPlugin]): LabeledDataMap =
-    transforms.foldLeft(dataMap) { (acc, p) =>
+  def routeTransforms[A](streams: Streams[A], transforms: Seq[TransformPlugin],
+                         pass: Pass[A, _]): Streams[A] =
+    transforms.zipWithIndex.foldLeft(streams) { case (acc, (p, i)) =>
       acc.get(p.label) match {
         case Some(entry) =>
-          acc.updated(p.label, entry.flatMap { df =>
-            log.info(s"Executing transform: ${p.name} (label: ${p.label})")
-            p match {
-              case m: MultiStreamTransformPlugin => m.executeWith(df, acc)
-              case _ => p.execute(df)
-            }
+          acc.updated(p.label, entry.flatMap { v =>
+            log.info(s"[${i + 1}/${transforms.size}] ${pass.verb} transform: " +
+              s"${p.name} (label: ${p.label})")
+            pass.transform(p, v, acc)
           })
         case None =>
           acc.updated(p.label, Left(new NoSuchElementException(
@@ -128,8 +80,32 @@ object Pipeline {
       }
     }
 
-  /** A15 — labeled output routing (pipeline.py:165-186): missing label
-    * ⇒ IMMEDIATE failure return (short-circuit, unlike A14).
+  /** A12/A13/A15 — output fan-out (pipeline.py:97-140, 165-186): each
+    * sink receives its label's stream — never another sink's result —
+    * in config order; a missing label or a failed sink stops the
+    * fan-out. Returns every sink's result in order.
+    */
+  def fanOut[A, B](streams: Streams[A], outputs: Seq[OutputPlugin],
+                   pass: Pass[A, B]): Either[Throwable, Seq[B]] =
+    outputs.zipWithIndex.foldLeft[Either[Throwable, Vector[B]]](Right(Vector.empty)) {
+      case (acc, (p, i)) =>
+        acc.flatMap { done =>
+          streams.get(p.label) match {
+            case Some(entry) =>
+              log.info(s"[${i + 1}/${outputs.size}] ${pass.verb} output: " +
+                s"${p.name} (label: ${p.label})")
+              entry.flatMap(pass.sink(p, _)).map(done :+ _)
+            case None =>
+              Left(new NoSuchElementException(
+                s"No data with label '${p.label}' for output plugin '${p.name}'"))
+          }
+        }
+    }
+
+  /** A16 — full pipeline (pipeline.py:188-212): inputs build the
+    * labeled map (later inputs with the same label overwrite earlier,
+    * matching dict semantics), transforms route by label, outputs
+    * sink by label.
     *
     * `persistMultiOutput` (DEFAULT since round 10) caches each stream
     * that MORE THAN ONE sink consumes, for the duration of the
@@ -140,44 +116,8 @@ object Pipeline {
     * cached (caching would only cost memory), so the flag is inert
     * for every 1-sink-per-label config. Opt out with
     * `persist_multi_output = false` when a label's output is larger
-    * than the compute that produced it.
-    */
-  def executeLabeledOutput(dataMap: LabeledDataMap,
-                           outputs: Seq[OutputPlugin],
-                           persistMultiOutput: Boolean = true): Either[Throwable, Unit] = {
-    val multi: Set[String] =
-      if (persistMultiOutput)
-        outputs.groupBy(_.label).filter(_._2.size > 1).keySet
-      else Set.empty
-    // streaming frames are never persisted (persist throws on them;
-    // each streaming sink is its own writeStream query anyway)
-    val effective: LabeledDataMap = dataMap.map { case (l, e) =>
-      l -> (if (multi(l))
-        e.map(df => if (df.isStreaming) df else df.persist())
-      else e)
-    }
-    val result = outputs.foldLeft[Either[Throwable, Unit]](Right(())) { (acc, p) =>
-      acc.flatMap { _ =>
-        effective.get(p.label) match {
-          case Some(entry) =>
-            log.info(s"Executing output: ${p.name} (label: ${p.label})")
-            entry.flatMap(p.execute)
-          case None =>
-            Left(new NoSuchElementException(
-              s"No data with label '${p.label}' for output plugin '${p.name}'"))
-        }
-      }
-    }
-    effective.foreach { case (l, e) =>
-      if (multi(l)) e.foreach(df => Errors.safe(df.unpersist()))
-    }
-    result
-  }
-
-  /** A16 — full pipeline (pipeline.py:188-212): inputs build the
-    * labeled map (later inputs with the same label overwrite earlier,
-    * matching dict semantics), transforms route by label, outputs
-    * sink by label.
+    * than the compute that produced it. Results are identical either
+    * way.
     */
   def runPipeline(inputs: Seq[InputPlugin],
                   transforms: Seq[TransformPlugin],
@@ -188,14 +128,28 @@ object Pipeline {
       log.info(s"Executing input: ${p.name} (label: ${p.label})")
       p.label -> p.execute()
     }.toMap
-    val transformed = executeLabeledTransformChain(dataMap, transforms)
-    executeLabeledOutput(transformed, outputs, persistMultiOutput)
+    val transformed = routeTransforms(dataMap, transforms, Run)
+    val multi: Set[String] =
+      if (persistMultiOutput)
+        outputs.groupBy(_.label).filter(_._2.size > 1).keySet
+      else Set.empty
+    // streaming frames are never persisted (persist throws on them;
+    // each streaming sink is its own writeStream query anyway)
+    val effective: LabeledDataMap = transformed.map { case (l, e) =>
+      l -> (if (multi(l)) e.map(df => if (df.isStreaming) df else df.persist())
+            else e)
+    }
+    val result = fanOut(effective, outputs, Run).map(_ => ())
+    effective.foreach { case (l, e) =>
+      if (multi(l)) e.foreach(df => Errors.safe(df.unpersist()))
+    }
+    result
   }
 
-  /** A17 — full dry-run pipeline (pipeline.py:215-238): build the
-    * label→schema map, then — reference quirk, kept for parity
-    * (docs/spec.md:416-418) — only the 'default' label flows through
-    * transform + output validation.
+  /** A17 — full dry-run pipeline (pipeline.py:215-238): the same
+    * routing as [[runPipeline]] over the label→schema map, so check
+    * passes exactly when run's plans resolve. Returns the schema the
+    * LAST sink would write.
     */
   def runDryRunPipeline(inputs: Seq[InputPlugin],
                         transforms: Seq[TransformPlugin],
@@ -205,9 +159,8 @@ object Pipeline {
       log.info(s"Dry-running input: ${p.name} (label: ${p.label})")
       p.label -> p.dryRun()
     }.toMap
-    val initial = schemaMap.getOrElse("default",
-      Left(new NoSuchElementException("No input data with label 'default'")))
-    val transformed = executeDryRunChain(initial, transforms, schemaMap)
-    executeOutputDryRun(transformed, outputs)
+    fanOut(routeTransforms(schemaMap, transforms, Check), outputs, Check)
+      .flatMap(_.lastOption.toRight(
+        new NoSuchElementException("No output plugin to validate")))
   }
 }

@@ -67,7 +67,9 @@ trait InputPlugin extends BasePlugin {
 /** Pure plan-to-plan function (plugin.py:68-77). */
 trait TransformPlugin extends BasePlugin {
   def execute(df: DataFrame): Either[Throwable, DataFrame]
-  /** Symbolic schema propagation for `check` (plugin.py:73-77). */
+  /** Symbolic schema propagation for `check` (plugin.py:73-77): the
+    * schema `execute` would produce. `check` routes labels exactly as
+    * `run` does, so this must agree with `execute`. */
   def dryRun(schema: StructType): Either[Throwable, StructType]
 }
 
@@ -87,10 +89,11 @@ trait MultiStreamTransformPlugin extends TransformPlugin {
                  schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType]
 
-  /** Single-stream fallbacks delegate with an empty map. */
+  /** Single-stream fallbacks delegate with an empty map (`override`:
+    * `dryRun` also replaces a base class's single-stream default). */
   final def execute(df: DataFrame): Either[Throwable, DataFrame] =
     executeWith(df, Map.empty)
-  final def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override final def dryRun(schema: StructType): Either[Throwable, StructType] =
     dryRunWith(schema, Map.empty)
 }
 

@@ -172,11 +172,6 @@ class DedupPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   private def numOpt(key: String, default: Double): Double =
     options.get(key).map(_.toString.toDouble).getOrElse(default)
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("method").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven deterministic sampling ([[graft.ops.Sampling]]):
@@ -336,9 +331,21 @@ class SamplePlugin(options: Map[String, Any], configDir: Path, label: String)
       }
     } yield out
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("method").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
+  /** mix_weights / mix_temperature count every source eagerly when
+    * the plan is built (an empty relation has no source to keep);
+    * both only drop rows, so the schema is declared unchanged once
+    * the named columns exist. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
+    options.get("method").map(_.toString) match {
+      case Some(m @ ("mix_weights" | "mix_temperature")) =>
+        for {
+          keyCol <- requiredString("key_column")
+          groupCol <- requiredString("group_column")
+          _ <- required(if (m == "mix_weights") "weights" else "temperature")
+          _ <- requireColumns(schema, Seq(keyCol, groupCol) ++
+            options.get("budget_column").map(_.toString))
+        } yield schema
+      case _ => super.dryRun(schema)
     }
 }
 
@@ -349,10 +356,10 @@ class RedactPiiPlugin(options: Map[String, Any], configDir: Path, label: String)
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "redact_pii"
 
-  def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    graft.core.Errors.safe {
+  def execute(df: DataFrame): Either[Throwable, DataFrame] = {
+    val tc = options.getOrElse("text_column", "text").toString
+    requireColumns(df.schema, Seq(tc)).flatMap(_ => graft.core.Errors.safe {
       import org.apache.spark.sql.functions.col
-      val tc = options.getOrElse("text_column", "text").toString
       val out = options.getOrElse("output_column", tc).toString
       val redacted = df.withColumn(out, Text.redactPii(col(tc)))
       if (options.get("with_counts").exists(_.toString.toBoolean))
@@ -360,14 +367,7 @@ class RedactPiiPlugin(options: Map[String, Any], configDir: Path, label: String)
           acc.withColumn(n, c.cast("long"))
         }
       else redacted
-    }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
+    })
   }
 }
 
@@ -389,6 +389,7 @@ class ContaminationPlugin(options: Map[String, Any], configDir: Path, label: Str
         s"No input data with label '$bl' for contamination plugin")))
       idCol <- requiredString("id_column")
       benchId = options.getOrElse("bench_id_column", "doc_id").toString
+      _ <- requireColumns(df.schema, Seq(idCol))
       out <- graft.core.Errors.safe {
         val tc = options.getOrElse("text_column", "text").toString
         val btc = options.getOrElse("bench_text_column", tc).toString
@@ -405,27 +406,6 @@ class ContaminationPlugin(options: Map[String, Any], configDir: Path, label: Str
           case other => throw new PluginExecutionError(
             s"Unknown contamination mode: '$other'")
         }
-      }
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      bl <- requiredString("bench_label")
-      _ <- schemas.getOrElse(bl, Left(new NoSuchElementException(
-        s"No input data with label '$bl' for contamination plugin")))
-      idCol <- requiredString("id_column")
-      out <- graft.core.Errors.safe {
-        val idField = schema.fields.find(_.name == idCol).getOrElse(
-          throw new graft.core.SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        if (options.getOrElse("mode", "flag").toString == "remove")
-          schema // anti-join keeps the corpus schema unchanged
-        else
-          StructType(Seq(idField,
-            StructField("n_overlap", LongType, nullable = false),
-            StructField("n_bench_docs", LongType, nullable = false)))
       }
     } yield out
 }
@@ -499,10 +479,16 @@ class DsirPlugin(options: Map[String, Any], configDir: Path, label: String)
           } yield (t, w) :: rest
       }
       kv <- required("k")
+      idCol = options.getOrElse("id_column", "doc_id").toString
+      tc = options.getOrElse("text_column", "text").toString
+      ttc = options.getOrElse("target_text_column", tc).toString
+      _ <- requireColumns(df.schema, Seq(idCol, tc))
+      _ <- targets.zip(spec).foldLeft[Either[Throwable, Unit]](Right(())) {
+        case (acc, ((t, _), (tl, _))) => acc.flatMap(_ =>
+          requireColumns(t.schema, Seq(ttc), "target schema" +
+            (if (spec.size > 1) s" (label '$tl')" else "")))
+      }
       out <- graft.core.Errors.safe {
-        val idCol = options.getOrElse("id_column", "doc_id").toString
-        val tc = options.getOrElse("text_column", "text").toString
-        val ttc = options.getOrElse("target_text_column", tc).toString
         // project, don't rename: renaming would collide when the
         // target already carries a column named `tc`, and the fit
         // needs only the text column anyway (no target id required).
@@ -532,40 +518,6 @@ class DsirPlugin(options: Map[String, Any], configDir: Path, label: String)
           graft.ops.Dsir.selectMix(df, projected, idCol, tc,
             k = k, buckets = buckets, alpha = alpha, seed = seed,
             roundTo = roundTo)
-      }
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      spec <- targetSpec()
-      tss <- spec.foldRight(
-          Right(Nil): Either[Throwable, List[StructType]]) {
-        case ((tl, _), acc) =>
-          for {
-            ts <- schemas.getOrElse(tl, Left(new NoSuchElementException(
-              s"No input data with label '$tl' for dsir plugin")))
-            rest <- acc
-          } yield ts :: rest
-      }
-      _ <- required("k")
-      out <- graft.core.Errors.safe {
-        val idCol = options.getOrElse("id_column", "doc_id").toString
-        val tc = options.getOrElse("text_column", "text").toString
-        val ttc = options.getOrElse("target_text_column", tc).toString
-        for (n <- Seq(idCol, tc))
-          if (!schema.fields.exists(_.name == n))
-            throw new graft.core.SchemaValidationError(
-              s"Column '$n' not found in schema")
-        for ((ts, (tl, _)) <- tss.zip(spec))
-          if (!ts.fields.exists(_.name == ttc))
-            throw new graft.core.SchemaValidationError(
-              s"Column '$ttc' not found in target schema" +
-                (if (spec.size > 1) s" (label '$tl')" else ""))
-        StructType(schema.fields ++ Seq(
-          StructField("dsir_logw", DoubleType, nullable = true),
-          StructField("dsir_key", DoubleType, nullable = true)))
       }
     } yield out
 }
@@ -599,6 +551,8 @@ class SessionizePlugin(options: Map[String, Any], configDir: Path, label: String
       user <- requiredString("user_column")
       ts <- requiredString("ts_column")
       value <- requiredString("value_column")
+      _ <- requireColumns(df.schema,
+        requiredCols.flatMap(options.get).map(_.toString))
       out <- {
         val gapSeconds = options.get("gap_seconds")
           .map(_.toString.toDouble.toLong).getOrElse(1800L)
@@ -622,26 +576,6 @@ class SessionizePlugin(options: Map[String, Any], configDir: Path, label: String
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      user <- requiredString("user_column")
-      _ <- requiredString("ts_column")
-      _ <- requiredString("value_column")
-      out <- requiredCols
-        .map(options.get(_).map(_.toString))
-        .collect { case Some(c) => c }
-        .find(c => !schema.fieldNames.contains(c))
-        .map(c => Left(new graft.core.SchemaValidationError(
-          s"Column '$c' not found in schema")))
-        .getOrElse {
-          if (method == "islands" && !options.contains("tie_column"))
-            Left(new graft.core.SchemaValidationError(
-              "Option 'tie_column' is required for method 'islands'"))
-          else propagateSchema(schema)(df =>
-            execute(df).fold(e => throw e, identity))
-        }
-    } yield out
 }
 
 /** Config-driven sliding-window chunking ([[graft.ops.Chunking]]):
@@ -664,11 +598,6 @@ class ChunkPlugin(options: Map[String, Any], configDir: Path, label: String)
           minTokens = options.get("min_tokens").map(_.toString.toInt).getOrElse(1))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("id_column").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven sequence packing ([[graft.ops.Packing]]): assign
@@ -701,15 +630,6 @@ class PackPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      _ <- requiredString("tokens_column")
-      _ <- stringList("shard_columns")
-      _ <- requiredString("order_column")
-      out <- propagateSchema(schema)(df =>
-        execute(df).fold(e => throw e, identity))
-    } yield out
 }
 
 /** Config-driven blocklist gate ([[graft.ops.Text]], UT1-style):
@@ -734,11 +654,6 @@ class BlocklistPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("words").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven pivot (long → wide): group_by (req, list),
@@ -766,11 +681,6 @@ class PivotPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("pivot_column").flatMap { _ =>
-      propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven unpivot/melt (wide → long): id_columns (req, list),
@@ -791,14 +701,6 @@ class UnpivotPlugin(options: Map[String, Any], configDir: Path, label: String)
           options.getOrElse("variable_column", "measure").toString,
           options.getOrElse("value_column", "value").toString)
       }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      _ <- stringList("id_columns")
-      _ <- stringList("value_columns")
-      out <- propagateSchema(schema)(df =>
-        execute(df).fold(e => throw e, identity))
     } yield out
 }
 
@@ -823,7 +725,7 @@ class VocabEncodePlugin(options: Map[String, Any], configDir: Path, label: Strin
         outCol = options.getOrElse("output_column", "token_ids").toString)
     }
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
+  override def dryRun(schema: StructType): Either[Throwable, StructType] = {
     val tc = options.getOrElse("text_column", "text").toString
     if (!schema.fieldNames.contains(tc))
       Left(new graft.core.SchemaValidationError(
@@ -903,7 +805,7 @@ class BpePlugin(options: Map[String, Any], configDir: Path, label: String)
       }
     } yield out
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
+  override def dryRun(schema: StructType): Either[Throwable, StructType] = {
     val tc = options.getOrElse("text_column", "text").toString
     if (!schema.fieldNames.contains(tc))
       Left(new graft.core.SchemaValidationError(
@@ -946,9 +848,6 @@ class ProfilePlugin(options: Map[String, Any], configDir: Path, label: String)
           exact = options.get("exact").exists(_.toString.toBoolean))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
 }
 
 /** Config-driven multimodal column processing
@@ -980,6 +879,7 @@ class MultimodalPlugin(options: Map[String, Any], configDir: Path, label: String
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       method <- requiredString("method")
+      _ <- requireColumns(df.schema, Seq(payloadColumn))
       out <- graft.core.Errors.safe {
         method match {
           case "decode_meta" =>
@@ -1010,14 +910,6 @@ class MultimodalPlugin(options: Map[String, Any], configDir: Path, label: String
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val pc = payloadColumn
-    if (!schema.fieldNames.contains(pc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$pc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-  }
 }
 
 /** Config-driven ANN / similarity search ([[graft.ops.Similarity]]):
@@ -1183,8 +1075,8 @@ class SimilarityPlugin(options: Map[String, Any], configDir: Path, label: String
   /** IVF/IVF-PQ training collects a corpus sample at plan-build time,
     * so the generic propagate-through-empty-frame dry-run would fail
     * on zero rows; the output schema is static, declare it directly. */
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
+  override def dryRunWith(schema: StructType,
+                          schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType] = {
     val embCol0 = options.getOrElse("embedding_column", "embedding").toString
     if (options.getOrElse("method", "brute").toString == "centroids")
@@ -1244,6 +1136,23 @@ class SimilarityPlugin(options: Map[String, Any], configDir: Path, label: String
               .toString, DoubleType, nullable = true),
             StructField("pct_rank", DoubleType, nullable = false))))
         })
+    // the index is written (build/append) or read (query) when the
+    // plan is built, and may not exist before run time
+    options.getOrElse("method", "brute").toString match {
+      case m @ ("index_build" | "index_append" | "index_query") =>
+        return for {
+          idCol <- requiredString("id_column")
+          _ <- requiredString("index_dir")
+          _ <- requireColumns(schema, Seq(idCol, embCol0))
+        } yield
+          if (m != "index_query") schema // the stream passes through
+          else StructType(Seq(
+            StructField("query_id", schema(idCol).dataType),
+            StructField("neighbor_id", schema(idCol).dataType),
+            StructField("cosine", DoubleType),
+            StructField("rank", IntegerType, nullable = false)))
+      case _ =>
+    }
     for {
       idCol <- requiredString("id_column")
       ql <- requiredString("queries_label")
@@ -1324,7 +1233,7 @@ class PercentilesPlugin(options: Map[String, Any], configDir: Path, label: Strin
       }
     } yield out
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
       keys <- stringList("group_by")
       valueCol <- requiredString("value_column")
@@ -1371,23 +1280,16 @@ class GopherFilterPlugin(options: Map[String, Any], configDir: Path, label: Stri
     minStopwordHits = num("min_stopword_hits", 2).toInt,
     maxDupLineFrac = num("max_dup_line_frac", 0.3))
 
-  def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    graft.core.Errors.safe {
-      val tc = options.getOrElse("text_column", "text").toString
+  def execute(df: DataFrame): Either[Throwable, DataFrame] = {
+    val tc = options.getOrElse("text_column", "text").toString
+    requireColumns(df.schema, Seq(tc)).flatMap(_ => graft.core.Errors.safe {
       options.getOrElse("mode", "filter").toString match {
         case "flags"  => Text.withGopherFlags(df, tc, thresholds)
         case "filter" => Text.gopherFilter(df, tc, thresholds)
         case other => throw new PluginExecutionError(
           s"Unknown gopher_filter mode: '$other'")
       }
-    }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
+    })
   }
 }
 
@@ -1432,7 +1334,7 @@ class DupSpansPlugin(options: Map[String, Any], configDir: Path, label: String)
   /** Static schema: spanStats persists an intermediate frame, so the
     * propagate-through-empty-frame dry-run would leave a stray cache
     * registration per `check` invocation. */
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
       idCol <- requiredString("id_column")
       out <- {
@@ -1476,22 +1378,16 @@ class C4Plugin(options: Map[String, Any], configDir: Path, label: String)
     minSentences = options.get("min_sentences")
       .map(_.toString.toDouble.toInt).getOrElse(3))
 
-  def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    graft.core.Errors.safe {
-      val tc = options.getOrElse("text_column", "text").toString
+  def execute(df: DataFrame): Either[Throwable, DataFrame] = {
+    val tc = options.getOrElse("text_column", "text").toString
+    requireColumns(df.schema, Seq(tc)).flatMap(_ => graft.core.Errors.safe {
       options.getOrElse("mode", "filter").toString match {
         case "flags"  => Text.withC4Flags(df, tc, thresholds)
         case "filter" => Text.c4Clean(df, tc, thresholds)
         case other => throw new PluginExecutionError(
           s"Unknown c4_filter mode: '$other'")
       }
-    }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
-    val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new SchemaValidationError(s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
+    })
   }
 }
 
@@ -1511,8 +1407,9 @@ class LmScorePlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       idCol <- requiredString("id_column")
+      tc = options.getOrElse("text_column", "text").toString
+      _ <- requireColumns(df.schema, Seq(idCol, tc))
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
         val addK = options.get("add_k").map(_.toString.toDouble).getOrElse(1.0)
         options.getOrElse("mode", "score").toString match {
           case "score" => graft.ops.LmScore.scoreDocs(df, idCol, tc, addK)
@@ -1528,25 +1425,6 @@ class LmScorePlugin(options: Map[String, Any], configDir: Path, label: String)
         }
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      out <- {
-        val tc = options.getOrElse("text_column", "text").toString
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(tc))
-          Left(new SchemaValidationError(
-            s"Column '$tc' not found in schema"))
-        else if (options.getOrElse("mode", "score").toString == "filter")
-          Right(schema) // semi-join keeps the corpus schema unchanged
-        else Right(StructType(Seq(schema(idCol),
-          StructField("n_bigrams", LongType, nullable = false),
-          StructField("avg_logprob", DoubleType))))
-      }
-    } yield out
 }
 
 /** Config-driven TF-IDF keyword extraction ([[graft.ops.Tfidf]]):
@@ -1560,21 +1438,12 @@ class TfidfPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       idCol <- requiredString("id_column")
+      tc = options.getOrElse("text_column", "text").toString
+      _ <- requireColumns(df.schema, Seq(idCol, tc))
       out <- graft.core.Errors.safe(
-        graft.ops.Tfidf.topTerms(df, idCol,
-          options.getOrElse("text_column", "text").toString,
+        graft.ops.Tfidf.topTerms(df, idCol, tc,
           k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(10)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("id_column").flatMap { idCol =>
-      val tc = options.getOrElse("text_column", "text").toString
-      if (!schema.fieldNames.contains(idCol))
-        Left(new SchemaValidationError(s"Column '$idCol' not found in schema"))
-      else if (!schema.fieldNames.contains(tc))
-        Left(new SchemaValidationError(s"Column '$tc' not found in schema"))
-      else propagateSchema(schema)(df => execute(df).fold(e => throw e, identity))
-    }
 }
 
 /** Config-driven BM25 ranked retrieval ([[graft.ops.Bm25]]): per-query
@@ -1644,8 +1513,8 @@ class Bm25Plugin(options: Map[String, Any], configDir: Path, label: String)
           b = options.get("b").map(_.toString.toDouble).getOrElse(0.75)))
     } yield out
 
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
+  override def dryRunWith(schema: StructType,
+                          schemas: Map[String, Either[Throwable, StructType]])
       : Either[Throwable, StructType] =
     for {
       idCol <- requiredString("id_column")
@@ -1683,26 +1552,13 @@ class NgramsPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       idCol <- requiredString("id_column")
+      tc = options.getOrElse("text_column", "text").toString
+      _ <- requireColumns(df.schema, Seq(idCol, tc))
       out <- graft.core.Errors.safe(
-        graft.ops.Ngrams.topNgrams(df, idCol,
-          options.getOrElse("text_column", "text").toString,
+        graft.ops.Ngrams.topNgrams(df, idCol, tc,
           n = options.get("n").map(_.toString.toDouble.toInt).getOrElse(2),
           k = options.get("k").map(_.toString.toDouble.toInt).getOrElse(100)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("id_column").flatMap { idCol =>
-      val tc = options.getOrElse("text_column", "text").toString
-      if (!schema.fieldNames.contains(idCol))
-        Left(new SchemaValidationError(s"Column '$idCol' not found in schema"))
-      else if (!schema.fieldNames.contains(tc))
-        Left(new SchemaValidationError(s"Column '$tc' not found in schema"))
-      else Right(StructType(Seq(
-        StructField("rank", LongType, nullable = false),
-        StructField("ngram", StringType, nullable = true),
-        StructField("n_occurrences", LongType, nullable = false),
-        StructField("n_docs", LongType, nullable = false))))
-    }
 }
 
 /** Config-driven blocked fuzzy matching ([[graft.ops.FuzzyJoin]]):
@@ -1727,6 +1583,7 @@ class FuzzyPairsPlugin(options: Map[String, Any], configDir: Path, label: String
     for {
       idCol <- requiredString("id_column")
       strCol <- requiredString("string_column")
+      _ <- requireColumns(df.schema, Seq(idCol, strCol))
       out <- options.get("reference_label").map(_.toString) match {
         case None => graft.core.Errors.safe(
           graft.ops.FuzzyJoin.selfFuzzyPairs(df, idCol, strCol,
@@ -1735,57 +1592,14 @@ class FuzzyPairsPlugin(options: Map[String, Any], configDir: Path, label: String
           for {
             ref <- streams.getOrElse(rl, Left(new NoSuchElementException(
               s"No input data with label '$rl' for fuzzy_pairs plugin")))
+            rid = options.getOrElse("reference_id_column", idCol).toString
+            rstr = options.getOrElse("reference_string_column", strCol).toString
+            _ <- requireColumns(ref.schema, Seq(rid, rstr), "reference schema")
             out <- graft.core.Errors.safe(
-              graft.ops.FuzzyJoin.fuzzyMatch(df, ref, idCol, strCol,
-                options.getOrElse("reference_id_column", idCol).toString,
-                options.getOrElse("reference_string_column", strCol).toString,
+              graft.ops.FuzzyJoin.fuzzyMatch(df, ref, idCol, strCol, rid, rstr,
                 maxDistance = maxDistance, maxBlock = maxBlock))
           } yield out
       }
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      strCol <- requiredString("string_column")
-      out <-
-        if (!schema.fieldNames.contains(idCol))
-          Left(new SchemaValidationError(
-            s"Column '$idCol' not found in schema"))
-        else if (!schema.fieldNames.contains(strCol))
-          Left(new SchemaValidationError(
-            s"Column '$strCol' not found in schema"))
-        else options.get("reference_label").map(_.toString) match {
-          case None => Right(StructType(Seq(
-            StructField("id_a", schema(idCol).dataType, nullable = true),
-            StructField("id_b", schema(idCol).dataType, nullable = true),
-            StructField("s_a", StringType, nullable = true),
-            StructField("s_b", StringType, nullable = true),
-            StructField("distance", LongType, nullable = true))))
-          case Some(rl) =>
-            schemas.getOrElse(rl, Left(new NoSuchElementException(
-              s"No input data with label '$rl' for fuzzy_pairs plugin")))
-              .flatMap { rs =>
-                val rid = options.getOrElse("reference_id_column", idCol)
-                  .toString
-                val rstr = options.getOrElse("reference_string_column", strCol)
-                  .toString
-                Seq(rid, rstr).find(c => !rs.fieldNames.contains(c)) match {
-                  case Some(c) => Left(new SchemaValidationError(
-                    s"Column '$c' not found in reference schema"))
-                  case None => Right(StructType(Seq(
-                    StructField("left_id", schema(idCol).dataType,
-                      nullable = true),
-                    StructField("right_id", rs(rid).dataType,
-                      nullable = true),
-                    StructField("s_l", StringType, nullable = true),
-                    StructField("s_r", StringType, nullable = true),
-                    StructField("distance", LongType, nullable = true))))
-                }
-              }
-        }
     } yield out
 }
 
@@ -1811,33 +1625,10 @@ class IntervalJoinPlugin(options: Map[String, Any], configDir: Path, label: Stri
       p <- requiredString("point_column")
       lo <- requiredString("lo_column")
       hi <- requiredString("hi_column")
+      _ <- requireColumns(df.schema, Seq(p))
+      _ <- requireColumns(intervals.schema, Seq(lo, hi), "intervals schema")
       out <- graft.core.Errors.safe(
         graft.plans.IntervalJoin.pointInInterval(df, intervals, p, lo, hi))
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      il <- requiredString("intervals_label")
-      is <- schemas.getOrElse(il, Left(new NoSuchElementException(
-        s"No input data with label '$il' for interval_join plugin")))
-      p <- requiredString("point_column")
-      lo <- requiredString("lo_column")
-      hi <- requiredString("hi_column")
-      out <-
-        if (!schema.fieldNames.contains(p))
-          Left(new SchemaValidationError(
-            s"Column '$p' not found in schema"))
-        else Seq(lo, hi).find(c => !is.fieldNames.contains(c)) match {
-          case Some(c) => Left(new SchemaValidationError(
-            s"Column '$c' not found in intervals schema"))
-          case None =>
-            // the public API casts point/lo/hi to long in place
-            def cast(s: StructType, names: Set[String]) = s.fields.map(f =>
-              if (names(f.name)) f.copy(dataType = LongType) else f)
-            Right(StructType(cast(schema, Set(p)) ++ cast(is, Set(lo, hi))))
-        }
     } yield out
 }
 
@@ -1867,6 +1658,8 @@ class AsOfJoinPlugin(options: Map[String, Any], configDir: Path, label: String)
       lt <- requiredString("left_time")
       rt <- requiredString("right_time")
       how = options.get("how").map(_.toString).getOrElse("inner")
+      _ <- requireColumns(df.schema, on :+ lt)
+      _ <- requireColumns(right.schema, on :+ rt, "right schema")
       _ <- collision(df.columns.toSeq, right.columns.toSeq, on)
       out <- graft.core.Errors.safe(
         graft.ops.AsOfJoin.asOf(df, right, on, lt, rt,
@@ -1885,41 +1678,6 @@ class AsOfJoinPlugin(options: Map[String, Any], configDir: Path, label: String)
           "side first (e.g. a rename plugin on the labeled stream)"))
       case None => Right(())
     }
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      rl <- requiredString("right_label")
-      rs <- schemas.getOrElse(rl, Left(new NoSuchElementException(
-        s"No input data with label '$rl' for asof_join plugin")))
-      on <- stringList("on")
-      lt <- requiredString("left_time")
-      rt <- requiredString("right_time")
-      out <- {
-        val missing =
-          (on :+ lt).find(c => !schema.fieldNames.contains(c))
-            .map(c => s"Column '$c' not found in schema")
-            .orElse((on :+ rt).find(c => !rs.fieldNames.contains(c))
-              .map(c => s"Column '$c' not found in right schema"))
-        missing match {
-          case Some(m) => Left(new SchemaValidationError(m))
-          case None =>
-            collision(schema.fieldNames.toSeq, rs.fieldNames.toSeq, on)
-              .left.map(e => new SchemaValidationError(e.getMessage))
-              .map { _ =>
-                // output = left columns + right payload (non-key) cols.
-                // Payload is ALWAYS nullable at runtime: execute unpacks
-                // it from the nullable `_match` struct (and how="left"
-                // yields null payloads), so the dry-run schema must not
-                // promise the right side's original non-nullability.
-                val payload = rs.fields.filterNot(f => on.contains(f.name))
-                  .map(_.copy(nullable = true))
-                StructType(schema.fields ++ payload)
-              }
-        }
-      }
-    } yield out
 }
 
 /** Config-driven SCD type-2 construction ([[graft.ops.Scd]]): collapse
@@ -1940,12 +1698,14 @@ class ScdPlugin(options: Map[String, Any], configDir: Path, label: String)
       keys <- stringList("key_columns")
       order <- stringList("order_columns")
       out <- options.getOrElse("mode", "scd2").toString match {
-        case "latest" => graft.core.Errors.safe(
-          graft.ops.Scd.latest(df, keys, order))
+        case "latest" =>
+          requireColumns(df.schema, keys ++ order).flatMap(_ =>
+            graft.core.Errors.safe(graft.ops.Scd.latest(df, keys, order)))
         case "scd2" =>
           for {
             attrs <- stringList("attr_columns")
             validFrom <- requiredString("valid_from_column")
+            _ <- requireColumns(df.schema, keys ++ order ++ attrs :+ validFrom)
             built <- graft.core.Errors.safe {
               val scd = graft.ops.Scd.scd2(df, keys, attrs, order, validFrom)
               options.get("as_of") match {
@@ -1959,25 +1719,6 @@ class ScdPlugin(options: Map[String, Any], configDir: Path, label: String)
         case other => Left(new PluginExecutionError(
           s"Unknown scd2 mode: '$other'"))
       }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keys <- stringList("key_columns")
-      order <- stringList("order_columns")
-      extra <-
-        if (options.getOrElse("mode", "scd2").toString == "latest")
-          Right(Seq.empty[String])
-        else for {
-          attrs <- stringList("attr_columns")
-          validFrom <- requiredString("valid_from_column")
-        } yield attrs :+ validFrom
-      _ <- (keys ++ order ++ extra)
-        .find(c => !schema.fieldNames.contains(c))
-        .map(c => Left(new SchemaValidationError(
-          s"Column '$c' not found in schema"))).getOrElse(Right(()))
-      out <- propagateSchema(schema)(df =>
-        execute(df).fold(e => throw e, identity))
     } yield out
 }
 
@@ -2061,7 +1802,7 @@ class GraphPlugin(options: Map[String, Any], configDir: Path, label: String)
   /** Static schema: pagerank runs jobs eagerly, so the generic
     * propagate-through-empty-frame dry-run would execute (and divide
     * rank mass by a zero node count). */
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
       method <- requiredString("method")
       src <- requiredString("src_column")
@@ -2104,16 +1845,10 @@ class TextAnalysisPlugin(options: Map[String, Any], configDir: Path, label: Stri
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "text_analysis"
 
-  def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    graft.core.Errors.safe(
-      Text.analyze(df, options.getOrElse("text_column", "text").toString))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = {
+  def execute(df: DataFrame): Either[Throwable, DataFrame] = {
     val tc = options.getOrElse("text_column", "text").toString
-    if (!schema.fieldNames.contains(tc))
-      Left(new graft.core.SchemaValidationError(
-        s"Column '$tc' not found in schema"))
-    else propagateSchema(schema)(df => Text.analyze(df, tc))
+    requireColumns(df.schema, Seq(tc)).flatMap(_ =>
+      graft.core.Errors.safe(Text.analyze(df, tc)))
   }
 }
 
@@ -2148,7 +1883,7 @@ class ClassifyNbPlugin(options: Map[String, Any], configDir: Path, label: String
       }
     } yield out
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
     for {
       idCol <- requiredString("id_column")
       labelCol <- requiredString("label_column")
@@ -2185,29 +1920,10 @@ class ResamplePlugin(options: Map[String, Any], configDir: Path, label: String)
       tsCol <- requiredString("ts_column")
       valueCol <- requiredString("value_column")
       step <- required("step_seconds")
+      _ <- requireColumns(df.schema, Seq(keyCol, tsCol, valueCol))
       out <- graft.core.Errors.safe(
         graft.ops.Resample.forwardFill(df, keyCol, tsCol, valueCol,
           step.toString.toDouble.toLong))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keyCol <- requiredString("key_column")
-      tsCol <- requiredString("ts_column")
-      valueCol <- requiredString("value_column")
-      _ <- required("step_seconds")
-      out <- {
-        val missing = Seq(keyCol, tsCol, valueCol)
-          .filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(Seq(
-          schema(keyCol),
-          StructField("slot_start", LongType, nullable = false),
-          StructField("value", schema(valueCol).dataType, nullable = true),
-          StructField("n_obs", LongType, nullable = false))))
-      }
     } yield out
 }
 
@@ -2233,15 +1949,19 @@ class ExpectPlugin(options: Map[String, Any], configDir: Path, label: String)
       case None => Map.empty
     }
 
+  private def report(df: DataFrame): DataFrame = {
+    val rowRules = tableOpt("rules").toSeq
+      .map { case (k, v) => k -> v.toString }.sortBy(_._1)
+    val uniqueRules = tableOpt("unique").toSeq.map {
+      case (k, xs: Seq[_]) => k -> xs.map(_.toString)
+      case (k, s) => k -> Seq(s.toString)
+    }.sortBy(_._1)
+    graft.ops.Expectations.check(df, rowRules, uniqueRules)
+  }
+
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     graft.core.Errors.safe {
-      val rowRules = tableOpt("rules").toSeq
-        .map { case (k, v) => k -> v.toString }.sortBy(_._1)
-      val uniqueRules = tableOpt("unique").toSeq.map {
-        case (k, xs: Seq[_]) => k -> xs.map(_.toString)
-        case (k, s) => k -> Seq(s.toString)
-      }.sortBy(_._1)
-      val report = graft.ops.Expectations.check(df, rowRules, uniqueRules)
+      val report = this.report(df)
       options.getOrElse("mode", "report").toString match {
         case "report" => report
         case "gate" =>
@@ -2257,15 +1977,12 @@ class ExpectPlugin(options: Map[String, Any], configDir: Path, label: String)
       }
     }
 
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    graft.core.Errors.safe {
-      options.getOrElse("mode", "report").toString match {
-        case "gate" => schema
-        case _ => StructType(Seq(
-          StructField("rule", StringType, nullable = false),
-          StructField("n_violations", LongType, nullable = true),
-          StructField("pass", BooleanType, nullable = true)))
-      }
+  /** The gate collects the report when the plan is built; check
+    * resolves the report's plan and declares the stream unchanged. */
+  override def dryRun(schema: StructType): Either[Throwable, StructType] =
+    options.getOrElse("mode", "report").toString match {
+      case "gate" => propagateSchema(schema)(report).map(_ => schema)
+      case _ => super.dryRun(schema)
     }
 }
 
@@ -2282,8 +1999,9 @@ class HashEmbedPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       idCol <- requiredString("id_column")
+      tc = options.getOrElse("text_column", "text").toString
+      _ <- requireColumns(df.schema, Seq(idCol, tc))
       out <- graft.core.Errors.safe {
-        val tc = options.getOrElse("text_column", "text").toString
         val d = options.get("dim").map(_.toString.toDouble.toInt).getOrElse(64)
         // LEFT join: the op only emits rows with non-empty normalized
         // text, but the plugin's contract (dryRun) is an appended
@@ -2291,21 +2009,6 @@ class HashEmbedPlugin(options: Map[String, Any], configDir: Path, label: String)
         // embedding instead of being silently dropped
         df.join(graft.ops.HashEmbed.embed(df, idCol, tc, d),
           Seq(idCol), "left")
-      }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      idCol <- requiredString("id_column")
-      out <- {
-        val tc = options.getOrElse("text_column", "text").toString
-        val missing = Seq(idCol, tc).filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(schema.fields :+
-          StructField("embedding", ArrayType(DoubleType, containsNull = true),
-            nullable = true)))
       }
     } yield out
 }
@@ -2325,28 +2028,10 @@ class FunnelPlugin(options: Map[String, Any], configDir: Path, label: String)
       tsCol <- requiredString("ts_column")
       tyCol <- requiredString("type_column")
       steps <- stringList("steps")
+      _ <- requireColumns(df.schema, Seq(keyCol, tsCol, tyCol))
       out <- graft.core.Errors.safe(
         graft.ops.Funnel.depth(df, keyCol, tsCol, tyCol, steps,
           options.get("within_seconds").map(_.toString.toDouble.toLong)))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keyCol <- requiredString("key_column")
-      tsCol <- requiredString("ts_column")
-      tyCol <- requiredString("type_column")
-      steps <- stringList("steps")
-      out <- {
-        val missing = Seq(keyCol, tsCol, tyCol)
-          .filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(
-          schema(keyCol) +:
-            StructField("funnel_depth", LongType, nullable = false) +:
-            steps.map(st => StructField(s"t_$st", LongType, nullable = true))))
-      }
     } yield out
 }
 
@@ -2364,26 +2049,10 @@ class CohortsPlugin(options: Map[String, Any], configDir: Path, label: String)
       keyCol <- requiredString("key_column")
       tsCol <- requiredString("ts_column")
       p <- required("period_seconds")
+      _ <- requireColumns(df.schema, Seq(keyCol, tsCol))
       out <- graft.core.Errors.safe(
         graft.ops.Cohorts.retention(df, keyCol, tsCol,
           p.toString.toDouble.toLong))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      keyCol <- requiredString("key_column")
-      tsCol <- requiredString("ts_column")
-      _ <- required("period_seconds")
-      out <- {
-        val missing = Seq(keyCol, tsCol).filterNot(schema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(new SchemaValidationError(
-            s"Column(s) ${missing.mkString(", ")} not found in schema"))
-        else Right(StructType(Seq(
-          StructField("cohort_period", LongType, nullable = true),
-          StructField("period_offset", LongType, nullable = true),
-          StructField("n_active", LongType, nullable = false))))
-      }
     } yield out
 }
 
@@ -2419,6 +2088,7 @@ class UrlPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       method <- requiredString("method")
       urlCol <- requiredString("url_column")
+      _ <- requireColumns(df.schema, Seq(urlCol))
       rules <- pslRules()
       out <- method match {
         case "parse" =>
@@ -2428,6 +2098,7 @@ class UrlPlugin(options: Map[String, Any], configDir: Path, label: String)
           for {
             idCol <- requiredString("id_column")
             cap <- required("cap")
+            _ <- requireColumns(df.schema, Seq(idCol))
             out <- graft.core.Errors.safe(
               graft.ops.Urls.capPerDomain(df, urlCol, idCol,
                 cap.toString.toDouble.toInt, rules))
@@ -2435,48 +2106,5 @@ class UrlPlugin(options: Map[String, Any], configDir: Path, label: String)
         case other => Left(new PluginExecutionError(
           s"Unknown url method: '$other' (expected parse | cap_per_domain)"))
       }
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      method <- requiredString("method")
-      urlCol <- requiredString("url_column")
-      out <-
-        if (!schema.fieldNames.contains(urlCol))
-          Left(new SchemaValidationError(
-            s"Column '$urlCol' not found in schema"))
-        else method match {
-          case "parse" =>
-            // withColumn REPLACES an existing column of the same
-            // name, so the declared schema must too: drop same-named
-            // input fields before appending (chained parse stages,
-            // or inputs already carrying url_*, stay valid)
-            val urlFields = Seq(
-              StructField("url_scheme", StringType, nullable = true),
-              StructField("url_host", StringType, nullable = true),
-              StructField("url_path", StringType, nullable = true),
-              StructField("url_query", StringType, nullable = true),
-              StructField("url_domain", StringType, nullable = true),
-              StructField("url_subdomain", StringType, nullable = true),
-              StructField("url_tld", StringType, nullable = true),
-              StructField("url_path_depth", IntegerType, nullable = true))
-            val byName = urlFields.map(f => f.name -> f).toMap
-            // replace IN PLACE (withColumn keeps the original column
-            // position); append only the genuinely new fields
-            val replaced = schema.fields.map(f =>
-              byName.getOrElse(f.name, f))
-            val existing = schema.fieldNames.toSet
-            Right(StructType(replaced ++
-              urlFields.filterNot(f => existing(f.name))))
-          case "cap_per_domain" =>
-            requiredString("id_column").flatMap { idCol =>
-              if (!schema.fieldNames.contains(idCol))
-                Left(new SchemaValidationError(
-                  s"Column '$idCol' not found in schema"))
-              else Right(schema) // cap filters rows, schema unchanged
-            }
-          case other => Left(new PluginExecutionError(
-            s"Unknown url method: '$other' (expected parse | cap_per_domain)"))
-        }
     } yield out
 }

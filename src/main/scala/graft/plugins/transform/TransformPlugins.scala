@@ -30,17 +30,48 @@ abstract class BaseTransformPlugin(val options: Map[String, Any],
         s"Option '$key' must be a list of strings, got: $other"))
     }
 
+  /** Fail with the plugin's own message when an input column is
+    * absent; called from `execute`, so run and check report it alike. */
+  protected def requireColumns(schema: StructType, cols: Seq[String],
+                               where: String = "schema"): Either[Throwable, Unit] =
+    cols.find(c => !schema.fieldNames.contains(c)) match {
+      case Some(c) => Left(new SchemaValidationError(s"Column '$c' not found in $where"))
+      case None => Right(())
+    }
+
+  private def empty(schema: StructType): DataFrame =
+    SparkSession.active.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
   /** Symbolic schema propagation without data: apply `f` to an EMPTY
     * frame with the input schema and read the result schema. This is
     * Catalyst's analyzer doing exactly what Polars' dry-run schema
     * walk does (ref pipeline.py:61-94) — resolution only, no job. */
   protected def propagateSchema(schema: StructType)(
       f: DataFrame => DataFrame): Either[Throwable, StructType] =
-    Errors.safe {
-      val spark = SparkSession.active
-      f(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)).schema
-    }.left.map(e => new SchemaValidationError(e.getMessage, e))
+    Errors.safe(f(empty(schema)).schema)
+      .left.map(e => new SchemaValidationError(e.getMessage, e))
+
+  /** `check`'s default: the schema `execute` produces over empty
+    * relations, so check agrees with run by construction. Override
+    * only where `execute` fires a Spark job or writes files, with a
+    * declared schema rule. */
+  def dryRun(schema: StructType): Either[Throwable, StructType] =
+    dryRunWith(schema, Map.empty)
+
+  /** Multi-stream form of [[dryRun]]: the other labeled streams are
+    * empty relations of their schemas too. */
+  def dryRunWith(schema: StructType,
+                 schemas: Map[String, Either[Throwable, StructType]])
+      : Either[Throwable, StructType] =
+    propagateSchema(schema) { df =>
+      val out = this match {
+        case m: MultiStreamTransformPlugin =>
+          m.executeWith(df, schemas.map { case (l, s) => l -> s.map(empty) })
+        case _ => execute(df)
+      }
+      out.fold(e => throw e, identity)
+    }
 }
 
 /** A5/A6 — the reference's only shipped transform: multiply one numeric
@@ -61,9 +92,20 @@ class ColumnMultiplierPlugin(options: Map[String, Any], configDir: Path, label: 
         new PluginExecutionError(s"Option 'multiplier' must be numeric, got: $m"))
     } yield (c.toString, mv)
 
+  /** The reference's checks, in `execute` so check and run agree. */
+  private def numericColumn(schema: StructType, c: String): Either[Throwable, Unit] =
+    schema.fields.find(_.name == c) match {
+      case None => Left(new SchemaValidationError(
+        s"Column '$c' not found in schema"))
+      case Some(f) if !f.dataType.isInstanceOf[NumericType] =>
+        Left(new SchemaValidationError(
+          s"Column '$c' has type ${f.dataType.simpleString}, expected numeric type"))
+      case Some(_) => Right(())
+    }
+
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     opts().flatMap { case (c, m) =>
-      Errors.safe {
+      numericColumn(df.schema, c).flatMap(_ => Errors.safe {
         // Match Polars dtype semantics (multiplier.py runs on Polars):
         // a whole multiplier keeps the column's own dtype (Int8 stays
         // Int8, Float32 stays Float32 — Spark's `*` would widen to
@@ -94,28 +136,7 @@ class ColumnMultiplierPlugin(options: Map[String, Any], configDir: Path, label: 
             prod.cast(orig)
           else prod
         df.withColumn(c, out)
-      }
-    }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    opts().flatMap { case (c, m) =>
-      schema.fields.find(_.name == c) match {
-        case None => Left(new SchemaValidationError(
-          s"Column '$c' not found in schema"))
-        case Some(f) if !f.dataType.isInstanceOf[NumericType] =>
-          Left(new SchemaValidationError(
-            s"Column '$c' has type ${f.dataType.simpleString}, expected numeric type"))
-        case Some(_) =>
-          // declare what execute actually produces, so `check` is
-          // trustworthy (integral/decimal x fractional widens to
-          // double, decimal x whole widens precision): symbolic
-          // propagation through execute on an empty frame — no
-          // hand-modeled type rules to drift (the reference's dry_run
-          // claims unchanged even where its runtime widens; accuracy
-          // wins here)
-          propagateSchema(schema)(df =>
-            execute(df).fold(e => throw e, identity))
-      }
+      })
     }
 }
 
@@ -128,10 +149,6 @@ class FilterPlugin(options: Map[String, Any], configDir: Path, label: String)
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     requiredString("predicate").flatMap(p => Errors.safe(df.filter(expr(p))))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    requiredString("predicate").flatMap(p =>
-      propagateSchema(schema)(_.filter(expr(p))))
 }
 
 /** Projection (ref docs/plugin_development.md:1506-1508). `columns`
@@ -143,10 +160,6 @@ class SelectPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     stringList("columns").flatMap(cs =>
       Errors.safe(df.select(cs.map(expr): _*)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("columns").flatMap(cs =>
-      propagateSchema(schema)(_.select(cs.map(expr): _*)))
 }
 
 /** Drop columns (ref docs/plugin_development.md:1518-1519; dry-run
@@ -155,17 +168,13 @@ class DropPlugin(options: Map[String, Any], configDir: Path, label: String)
     extends BaseTransformPlugin(options, configDir, label) {
   def name: String = "drop"
 
+  // an absent name fails (Spark's drop alone would ignore it)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    stringList("columns").flatMap(cs => Errors.safe(df.drop(cs: _*)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("columns").flatMap { cs =>
-      val missing = cs.filterNot(c => schema.fieldNames.contains(c))
-      if (missing.nonEmpty)
-        Left(new SchemaValidationError(
-          s"Column '${missing.head}' not found in schema"))
-      else Right(StructType(schema.fields.filterNot(f => cs.contains(f.name))))
-    }
+    for {
+      cs <- stringList("columns")
+      _ <- requireColumns(df.schema, cs)
+      out <- Errors.safe(df.drop(cs: _*))
+    } yield out
 }
 
 /** Add/replace a column from a SQL expression
@@ -180,13 +189,6 @@ class WithColumnPlugin(options: Map[String, Any], configDir: Path, label: String
       e <- requiredString("expression")
       out <- Errors.safe(df.withColumn(c, expr(e)))
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      c <- requiredString("column")
-      e <- requiredString("expression")
-      out <- propagateSchema(schema)(_.withColumn(c, expr(e)))
-    } yield out
 }
 
 /** Cast a column (ref examples/generate_sample_data.py:82-91 `df.cast`). */
@@ -198,16 +200,8 @@ class CastPlugin(options: Map[String, Any], configDir: Path, label: String)
     for {
       c <- requiredString("column")
       t <- requiredString("dtype")
+      _ <- requireColumns(df.schema, Seq(c))
       out <- Errors.safe(df.withColumn(c, col(c).cast(t)))
-    } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      c <- requiredString("column")
-      t <- requiredString("dtype")
-      _ <- if (schema.fieldNames.contains(c)) Right(())
-           else Left(new SchemaValidationError(s"Column '$c' not found in schema"))
-      out <- propagateSchema(schema)(_.withColumn(c, col(c).cast(t)))
     } yield out
 }
 
@@ -225,18 +219,13 @@ class RenamePlugin(options: Map[String, Any], configDir: Path, label: String)
         s"Option 'mapping' must be a table of old = \"new\" pairs, got: $other"))
     }
 
+  // an absent name fails (Spark's rename alone would ignore it)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    mapping().flatMap(m => Errors.safe(df.withColumnsRenamed(m)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    mapping().flatMap { m =>
-      val missing = m.keys.filterNot(schema.fieldNames.contains)
-      if (missing.nonEmpty)
-        Left(new SchemaValidationError(
-          s"Column '${missing.head}' not found in schema"))
-      else Right(StructType(schema.fields.map(f =>
-        f.copy(name = m.getOrElse(f.name, f.name)))))
-    }
+    for {
+      m <- mapping()
+      _ <- requireColumns(df.schema, m.keys.toSeq)
+      out <- Errors.safe(df.withColumnsRenamed(m))
+    } yield out
 }
 
 /** Group-by aggregation (ref docs/plugin_development.md:1521-1522;
@@ -263,7 +252,7 @@ class GroupByAggPlugin(options: Map[String, Any], configDir: Path, label: String
         } yield cols.map(c => s"$fn($c) AS ${c}_$fn")
     }
 
-  private def build(df: DataFrame): Either[Throwable, DataFrame] =
+  def execute(df: DataFrame): Either[Throwable, DataFrame] =
     for {
       keys <- stringList("group_by")
       aggs <- aggExprs()
@@ -274,14 +263,6 @@ class GroupByAggPlugin(options: Map[String, Any], configDir: Path, label: String
         df.groupBy(keys.map(col): _*)
           .agg(expr(aggs.head), aggs.tail.map(expr): _*))
     } yield out
-
-  def execute(df: DataFrame): Either[Throwable, DataFrame] = build(df)
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    propagateSchemaVia(schema)
-
-  private def propagateSchemaVia(schema: StructType): Either[Throwable, StructType] =
-    propagateSchema(schema)(df => build(df).fold(e => throw e, identity))
 }
 
 /** Join with the stream of another label (`right_label`) — the
@@ -315,25 +296,6 @@ class JoinPlugin(options: Map[String, Any], configDir: Path, label: String)
         df.join(r, on, how)
       }
     } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      rl <- rightLabel()
-      rs <- schemas.getOrElse(rl, Left(new NoSuchElementException(
-        s"No input data with label '$rl' for join plugin")))
-      on <- stringList("on")
-      how = options.get("how").map(_.toString).getOrElse("inner")
-      out <- Errors.safe {
-        val spark = SparkSession.active
-        val l = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-        val r = spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), rs)
-        l.join(r, on, how).schema
-      }.left.map(e => new SchemaValidationError(e.getMessage, e))
-    } yield out
 }
 
 /** Sort (ref docs/plugin_development.md:1527-1528). `by` is a list of
@@ -356,16 +318,12 @@ class SortPlugin(options: Map[String, Any], configDir: Path, label: String)
     }
 
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
-    sortCols().flatMap(cs => Errors.safe(df.orderBy(cs: _*)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    stringList("by").flatMap { bys =>
-      val missing = bys.filterNot(schema.fieldNames.contains)
-      if (missing.nonEmpty)
-        Left(new SchemaValidationError(
-          s"Column '${missing.head}' not found in schema"))
-      else Right(schema)
-    }
+    for {
+      bys <- stringList("by")
+      _ <- requireColumns(df.schema, bys)
+      cs <- sortCols()
+      out <- Errors.safe(df.orderBy(cs: _*))
+    } yield out
 }
 
 /** when/then/otherwise conditional column
@@ -385,18 +343,6 @@ class WhenThenPlugin(options: Map[String, Any], configDir: Path, label: String)
         df.withColumn(c, otherE.fold(base)(o => base.otherwise(expr(o))))
       }
     } yield out
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    for {
-      c <- requiredString("column")
-      cond <- requiredString("when")
-      thenE <- requiredString("then")
-      otherE = options.get("otherwise").map(_.toString)
-      out <- propagateSchema(schema) { df =>
-        val base = when(expr(cond), expr(thenE))
-        df.withColumn(c, otherE.fold(base)(o => base.otherwise(expr(o))))
-      }
-    } yield out
 }
 
 /** Distinct / dropDuplicates (subset optional). */
@@ -412,8 +358,6 @@ class DistinctPlugin(options: Map[String, Any], configDir: Path, label: String)
         case None => df.distinct()
       }
     }
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] = Right(schema)
 }
 
 /** Limit / top-k head. */
@@ -424,9 +368,6 @@ class LimitPlugin(options: Map[String, Any], configDir: Path, label: String)
   def execute(df: DataFrame): Either[Throwable, DataFrame] =
     required("n").flatMap(n =>
       Errors.safe(df.limit(n.toString.toDouble.toInt)))
-
-  def dryRun(schema: StructType): Either[Throwable, StructType] =
-    required("n").map(_ => schema)
 }
 
 /** Union with another labeled stream (by name, allowing missing
@@ -451,18 +392,6 @@ class UnionPlugin(options: Map[String, Any], configDir: Path, label: String)
         else df.union(right)
       }
     } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      rl <- requiredString("right_label")
-      rs <- schemas.getOrElse(rl, Left(new NoSuchElementException(
-        s"No input data with label '$rl' for union plugin")))
-      _ <- if (rs.size == schema.size) Right(())
-           else Left(new SchemaValidationError(
-             s"Union requires same column count: ${schema.size} vs ${rs.size}"))
-    } yield schema
 }
 
 /** Free-form SQL over the labeled streams: every stream is registered
@@ -503,23 +432,5 @@ class SqlPlugin(options: Map[String, Any], configDir: Path, label: String)
         }
         rebind(parent, scratch.sql(q))
       }
-    } yield out
-
-  def dryRunWith(schema: StructType,
-                 schemas: Map[String, Either[Throwable, StructType]])
-      : Either[Throwable, StructType] =
-    for {
-      q <- requiredString("query")
-      out <- Errors.safe {
-        val scratch = SparkSession.active.newSession()
-        def empty(s: StructType) = scratch.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-        empty(schema).createOrReplaceTempView("input")
-        schemas.foreach {
-          case (l, Right(s)) => empty(s).createOrReplaceTempView(l)
-          case _ => ()
-        }
-        scratch.sql(q).schema
-      }.left.map(e => new SchemaValidationError(e.getMessage, e))
     } yield out
 }

@@ -12,7 +12,9 @@ import graft.SharedSpark
   * (tests/pipeline/test_execute_transform_chain.py,
   * test_label_routing.py, test_run_pipeline.py): fold order,
   * stop-on-first-failure, label hit/miss semantics, multi-stream
-  * independence. Plugin doubles mirror tests/conftest.py:24-89. */
+  * independence — over the one label-routed fold and fan-out that
+  * both `run` (`Pipeline.Run`) and `check` (`Pipeline.Check`) use.
+  * Plugin doubles mirror tests/conftest.py:24-89. */
 class PipelineSpec extends AnyFunSuite {
   implicit lazy val spark: SparkSession = SharedSpark.spark
   private val dir = Paths.get("/tmp")
@@ -35,6 +37,21 @@ class PipelineSpec extends AnyFunSuite {
       Right(schema.add(name, org.apache.spark.sql.types.IntegerType))
   }
 
+  private def source(df: => DataFrame, l: String = "default"): InputPlugin =
+    new InputPlugin {
+      val name = s"in-$l"; val options: Map[String, Any] = Map.empty
+      val configDir: Path = dir
+      override val label = l
+      def execute()(implicit spark: SparkSession): Either[Throwable, DataFrame] =
+        Right(df)
+      def dryRun()(implicit spark: SparkSession): Either[Throwable, StructType] =
+        Right(df.schema)
+    }
+
+  private def chain[A](init: Either[Throwable, A], ts: Seq[TransformPlugin],
+                       pass: Pipeline.Pass[A, _]): Either[Throwable, A] =
+    Pipeline.routeTransforms(Map("default" -> init), ts, pass)("default")
+
   private class Failing(val name: String, override val label: String = "default")
       extends TransformPlugin {
     val options: Map[String, Any] = Map.empty
@@ -47,8 +64,8 @@ class PipelineSpec extends AnyFunSuite {
 
   test("transform chain folds left-to-right") {
     val trace = new StringBuilder
-    val chain = Seq(new Dummy("p1", trace = trace), new Dummy("p2", trace = trace))
-    val out = Pipeline.executeTransformChain(Right(frame(Seq(1, 2))), chain)
+    val ts = Seq(new Dummy("p1", trace = trace), new Dummy("p2", trace = trace))
+    val out = chain(Right(frame(Seq(1, 2))), ts, Pipeline.Run)
     assert(out.isRight)
     assert(trace.toString == "p1p2")
     assert(out.toOption.get.columns.toSeq == Seq("a", "p1", "p2"))
@@ -56,17 +73,17 @@ class PipelineSpec extends AnyFunSuite {
 
   test("chain stops at first failure and keeps its error") {
     val trace = new StringBuilder
-    val chain = Seq(new Dummy("p1", trace = trace), new Failing("boom"),
+    val ts = Seq(new Dummy("p1", trace = trace), new Failing("boom"),
       new Dummy("p2", trace = trace))
-    val out = Pipeline.executeTransformChain(Right(frame(Seq(1))), chain)
+    val out = chain(Right(frame(Seq(1))), ts, Pipeline.Run)
     assert(out.left.toOption.get.getMessage == "boom failed")
     assert(trace.toString == "p1") // p2 never ran
   }
 
   test("labeled routing: missing label STORES failure (pipeline continues)") {
     val data: Pipeline.LabeledDataMap = Map("default" -> Right(frame(Seq(1))))
-    val out = Pipeline.executeLabeledTransformChain(data,
-      Seq(new Dummy("t1", label = "absent")))
+    val out = Pipeline.routeTransforms(data,
+      Seq(new Dummy("t1", label = "absent")), Pipeline.Run)
     assert(out("default").isRight) // untouched
     val err = out("absent").left.toOption.get
     assert(err.isInstanceOf[NoSuchElementException])
@@ -76,8 +93,8 @@ class PipelineSpec extends AnyFunSuite {
   test("labeled routing: independent streams transform independently") {
     val data: Pipeline.LabeledDataMap = Map(
       "s1" -> Right(frame(Seq(1))), "s2" -> Right(frame(Seq(2))))
-    val out = Pipeline.executeLabeledTransformChain(data,
-      Seq(new Dummy("t1", label = "s1")))
+    val out = Pipeline.routeTransforms(data,
+      Seq(new Dummy("t1", label = "s1")), Pipeline.Run)
     assert(out("s1").toOption.get.columns.contains("t1"))
     assert(!out("s2").toOption.get.columns.contains("t1"))
   }
@@ -90,17 +107,56 @@ class PipelineSpec extends AnyFunSuite {
       def execute(df: DataFrame): Either[Throwable, Unit] = Right(())
       def dryRun(s: StructType): Either[Throwable, StructType] = Right(s)
     }
-    val out = Pipeline.executeLabeledOutput(
-      Map("default" -> Right(frame(Seq(1)))), Seq(sink))
+    val out = Pipeline.fanOut(
+      Map("default" -> Right(frame(Seq(1)))), Seq(sink), Pipeline.Run)
     assert(out.left.toOption.get.getMessage.contains(
       "No data with label 'absent'"))
   }
 
   test("dry-run chain propagates schema symbolically") {
     val init: StructType = frame(Seq(1L)).schema
-    val out = Pipeline.executeDryRunChain(Right(init),
-      Seq(new Dummy("c1"), new Dummy("c2")))
+    val out = chain(Right(init), Seq(new Dummy("c1"), new Dummy("c2")),
+      Pipeline.Check)
     assert(out.toOption.get.fieldNames.toSeq == Seq("a", "c1", "c2"))
+    // ... and stops at the first failure, like run
+    val bad = chain(Right(init), Seq(new Dummy("c1"), new Failing("boom"),
+      new Dummy("c2")), Pipeline.Check)
+    assert(bad.left.toOption.get.getMessage == "boom dry failed")
+  }
+
+  test("check routes labels as run does: a transform labelled 'orders' " +
+      "is dry-run against the 'orders' schema") {
+    import spark.implicits._
+    val orders = Seq((1L, 9.5)).toDF("o_orderkey", "o_totalprice")
+    def sink(l: String): OutputPlugin = new OutputPlugin {
+      val name = s"out-$l"; val options: Map[String, Any] = Map.empty
+      val configDir: Path = dir
+      override val label = l
+      def execute(df: DataFrame): Either[Throwable, Unit] = Right(())
+      def dryRun(s: StructType): Either[Throwable, StructType] = Right(s)
+    }
+    val inputs = Seq(source(frame(Seq(1))), source(orders, "orders"))
+    val ts = Seq(new Dummy("t_orders", label = "orders"))
+    val dry = Pipeline.runDryRunPipeline(inputs, ts, Seq(sink("orders")))
+    assert(dry.toOption.get.fieldNames.toSeq ==
+      Seq("o_orderkey", "o_totalprice", "t_orders"))
+    // the 'default' stream is untouched, and each sink validates its
+    // own label's schema
+    val both = Pipeline.fanOut(
+      Pipeline.routeTransforms(inputs.map(p => p.label -> p.dryRun()).toMap,
+        ts, Pipeline.Check),
+      Seq(sink("default"), sink("orders")), Pipeline.Check)
+    assert(both.toOption.get.map(_.fieldNames.toSeq) ==
+      Seq(Seq("a"), Seq("o_orderkey", "o_totalprice", "t_orders")))
+    // no 'default' input is needed at all
+    assert(Pipeline.runDryRunPipeline(Seq(source(orders, "orders")), ts,
+      Seq(sink("orders"))).isRight)
+    // a failure on a stream no sink reads fails neither run nor check
+    val unread = Seq(new Failing("boom", label = "orders"))
+    assert(Pipeline.runPipeline(inputs, unread, Seq(sink("default"))).isRight)
+    assert(Pipeline.runDryRunPipeline(inputs, unread, Seq(sink("default"))).isRight)
+    assert(Pipeline.runDryRunPipeline(inputs, unread, Seq(sink("orders")))
+      .left.toOption.get.getMessage == "boom dry failed")
   }
 
   test("output dry-run fans out the ORIGINAL schema (ref pipeline.py:97-117)") {
@@ -117,11 +173,12 @@ class PipelineSpec extends AnyFunSuite {
       }
     }
     val init: StructType = frame(Seq(1L)).schema // 1 column
-    val out = Pipeline.executeOutputDryRun(Right(init),
-      Seq(sink("o1"), sink("o2"), sink("o3")))
+    val out = Pipeline.fanOut(Map("default" -> Right(init)),
+      Seq(sink("o1"), sink("o2"), sink("o3")), Pipeline.Check)
     assert(validated == List(1, 1, 1)) // each saw the ORIGINAL 1-col schema
-    // ... and the returned value is the LAST sink's result
-    assert(out.toOption.get.fieldNames.toSeq == Seq("a", "extra_o3"))
+    // ... and each sink's result is returned in order
+    assert(out.toOption.get.map(_.fieldNames.last) ==
+      Seq("extra_o1", "extra_o2", "extra_o3"))
     // failure still stops the fold
     val boom = new OutputPlugin {
       val name = "boom"; val options: Map[String, Any] = Map.empty
@@ -131,8 +188,8 @@ class PipelineSpec extends AnyFunSuite {
         Left(new SchemaValidationError("boom dry failed"))
     }
     validated = Nil
-    val bad = Pipeline.executeOutputDryRun(Right(init),
-      Seq(sink("o1"), boom, sink("o2")))
+    val bad = Pipeline.fanOut(Map("default" -> Right(init)),
+      Seq(sink("o1"), boom, sink("o2")), Pipeline.Check)
     assert(bad.isLeft && validated == List(1)) // o2 never validated
   }
 
@@ -147,12 +204,12 @@ class PipelineSpec extends AnyFunSuite {
       }
       def dryRun(s: StructType): Either[Throwable, StructType] = Right(s)
     }
-    val ok = Pipeline.executeOutput(Right(frame(Seq(1))),
-      Seq(sink("o1"), sink("o2")))
+    val data: Pipeline.LabeledDataMap = Map("default" -> Right(frame(Seq(1))))
+    val ok = Pipeline.fanOut(data, Seq(sink("o1"), sink("o2")), Pipeline.Run)
     assert(ok.isRight && seen == List("o1", "o2"))
     seen = Nil
-    val bad = Pipeline.executeOutput(Right(frame(Seq(1))),
-      Seq(sink("o1", fail = true), sink("o2")))
+    val bad = Pipeline.fanOut(data,
+      Seq(sink("o1", fail = true), sink("o2")), Pipeline.Run)
     assert(bad.isLeft && seen == List("o1"))
   }
 
@@ -172,30 +229,27 @@ class PipelineSpec extends AnyFunSuite {
     }
     val outs = Seq(sink("o1"), sink("o2"), sink("o3"))
 
+    val in = Seq(source(upstream))
     acc.reset()
-    assert(Pipeline.executeLabeledOutput(
-      Map("default" -> Right(upstream)), outs, persistMultiOutput = true).isRight)
+    assert(Pipeline.runPipeline(in, Nil, outs, persistMultiOutput = true).isRight)
     assert(acc.value == 100L,
       s"persisted fan-out should execute upstream once, saw ${acc.value / 100} runs")
 
     // the default IS persist-on-fan-out (round 10): one upstream run
     acc.reset()
-    assert(Pipeline.executeLabeledOutput(
-      Map("default" -> Right(upstream)), outs).isRight)
+    assert(Pipeline.runPipeline(in, Nil, outs).isRight)
     assert(acc.value == 100L,
       s"default fan-out should persist, saw ${acc.value / 100} runs")
 
     // explicit opt-out restores reference recompute-per-sink behavior
     acc.reset()
-    assert(Pipeline.executeLabeledOutput(
-      Map("default" -> Right(upstream)), outs,
+    assert(Pipeline.runPipeline(in, Nil, outs,
       persistMultiOutput = false).isRight)
     assert(acc.value == 300L)
 
     // a single-sink label is never cached, even with the option on
     acc.reset()
-    assert(Pipeline.executeLabeledOutput(
-      Map("default" -> Right(upstream)), Seq(sink("only")),
+    assert(Pipeline.runPipeline(in, Nil, Seq(sink("only")),
       persistMultiOutput = true).isRight)
     assert(acc.value == 100L)
   }
@@ -217,12 +271,8 @@ class PipelineSpec extends AnyFunSuite {
     }
     // with the round-10 default (persist on), this used to crash on
     // Dataset.persist before reaching any sink
-    assert(Pipeline.executeLabeledOutput(
-      Map("default" -> Right(streamDf)),
+    assert(Pipeline.runPipeline(Seq(source(streamDf)), Nil,
       Seq(sink("s1"), sink("s2"))).isRight)
     assert(seen == 2)
-    assert(Pipeline.executeOutput(Right(streamDf),
-      Seq(sink("s3"), sink("s4"))).isRight)
-    assert(seen == 4)
   }
 }

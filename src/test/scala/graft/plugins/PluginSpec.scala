@@ -140,6 +140,41 @@ class PluginSpec extends AnyFunSuite {
     assert(missing.getMessage.contains("No input data with label 'dims'"))
   }
 
+  test("union by_name + allow_missing_columns: dry run declares the " +
+      "right side's extra columns, as run produces them") {
+    val left = Seq((1L, "a")).toDF("k", "s")
+    val right = Seq((2L, 3.5)).toDF("k", "extra")
+    val plug = new UnionPlugin(Map("right_label" -> "more", "by_name" -> true,
+      "allow_missing_columns" -> true), dir, "default")
+    val out = plug.executeWith(left, Map("more" -> Right(right)))
+      .fold(e => fail(e.getMessage), identity)
+    assert(out.columns.toSeq == Seq("k", "s", "extra"))
+    val dry = plug.dryRunWith(left.schema, Map("more" -> Right(right.schema)))
+      .fold(e => fail(e.getMessage), identity)
+    assert(dry.fieldNames.toSeq == out.columns.toSeq)
+    assert(dry.map(_.dataType) == out.schema.map(_.dataType))
+  }
+
+  test("distinct on a column that does not exist fails check as it fails run") {
+    val df = Seq((1L, "a")).toDF("k", "s")
+    val plug = new DistinctPlugin(Map("columns" -> Seq("nope")), dir, "default")
+    assert(plug.execute(df).isLeft)
+    assert(plug.dryRun(df.schema).isLeft)
+    val ok = new DistinctPlugin(Map("columns" -> Seq("s")), dir, "default")
+    assert(ok.dryRun(df.schema).toOption.get == df.schema)
+  }
+
+  test("drop / rename of an absent column fail run as they fail check") {
+    val df = Seq((1L, "a")).toDF("k", "s")
+    for (plug <- Seq(
+        new DropPlugin(Map("columns" -> Seq("nope")), dir, "default"),
+        new RenamePlugin(Map("mapping" -> Map("nope" -> "x")), dir, "default"))) {
+      assert(plug.execute(df).left.toOption.get.getMessage
+        .contains("Column 'nope' not found"))
+      assert(plug.dryRun(df.schema).isLeft)
+    }
+  }
+
   test("parquet writer: writes + creates parents; dry_run validates path") {
     val out = Files.createTempDirectory("wr").resolve("nested/deep/out.parquet")
     val plug = new ParquetWriterPlugin(
